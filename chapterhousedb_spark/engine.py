@@ -48,6 +48,12 @@ from chapterhousedb_spark.sqlfront.table_funcs import (
 # re-exported here for backward compatibility.
 from chapterhousedb_spark.status import QueryStatus  # noqa: E402
 
+# Row-group cap for materialized results: the reference's
+# max_rows_per_batch (physical_planner.rs:580). ResultCursor decodes
+# every row group a page overlaps, so this bounds the rows a page fetch
+# decodes per file it touches.
+RESULT_ROW_GROUP_ROWS = 10_000
+
 
 @dataclass
 class QueryHandle:
@@ -306,7 +312,9 @@ class Engine:
             # one-shot part of cancelJobGroup never saw
             if handle.cancelled:
                 raise RuntimeError("cancelled before execution started")
-            df.write.mode("overwrite").parquet(out_dir)
+            df.write.mode("overwrite").option(
+                "parquet.block.row.count.limit", RESULT_ROW_GROUP_ROWS
+            ).parquet(out_dir)
             manifest = ResultManifest.build(out_dir)
             manifest.save(out_dir)
             handle.result_dir = out_dir

@@ -10,8 +10,11 @@ intricate code in the reference; we replace it with a row-count manifest
 written once at materialization time, so a page fetch is a binary search
 plus reads of only the overlapping files (and only the needed row
 groups within them). At 100 TB of results the manifest stays
-metadata-sized (one entry per file) and no fetch ever buffers more than
-the requested page.
+metadata-sized (one entry per file). A fetch decodes every row group
+its page overlaps, whole; the engine writes results in row groups of at
+most 10,000 rows (engine.RESULT_ROW_GROUP_ROWS, the reference's batch
+size), so a page decodes one such group per file it touches, or two
+where it straddles a group boundary, instead of the whole file.
 """
 
 from __future__ import annotations

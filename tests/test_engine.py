@@ -94,6 +94,47 @@ def test_order_by_and_pagination(engine, sf_dir):
     assert engine.fetch(h.query_id, 50, 50).column("o_orderkey").to_pylist() == keys2
 
 
+def test_result_row_groups_capped_and_paging_across_boundaries(engine):
+    """Results are written in row groups of at most 10,000 rows (the
+    reference's max_rows_per_batch), and pages that straddle a row-group
+    or file boundary, forward or backward, equal their slice of the
+    result. Two range partitions give two 12,500-row files in id order:
+    row-group boundaries at 10,000 and 22,500, a file boundary at
+    12,500."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    [h] = engine.sql_wait("select id from range(0, 25000, 1, 2)")
+    assert h.status is QueryStatus.COMPLETE, h.error
+    files = [
+        os.path.join(h.result_dir, f)
+        for f in sorted(os.listdir(h.result_dir))
+        if f.endswith(".parquet")
+    ]
+    groups = [
+        [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+        for md in map(pq.read_metadata, files)
+    ]
+    assert groups == [[10_000, 2_500], [10_000, 2_500]]
+
+    rows = list(range(25_000))
+
+    def ids(t):
+        return t.column("id").to_pylist()
+
+    for offset in (9_975, 12_475, 22_475):
+        assert ids(engine.fetch(h.query_id, offset, 50)) == rows[
+            offset : offset + 50
+        ]
+    # page 3 = [9000, 12000) straddles a row-group boundary, page 4 =
+    # [12000, 15000) the file boundary; prev_page re-serves page 3
+    it = engine.iterator(h.query_id, page_size=3_000)
+    pages = [ids(it.next_page()) for _ in range(5)]
+    assert pages == [rows[k * 3_000 : (k + 1) * 3_000] for k in range(5)]
+    assert ids(it.prev_page()) == rows[9_000:12_000]
+
+
 def test_fetch_past_end(engine, sf_dir):
     [h] = engine.sql_wait(
         f"select * from read_files('{sf_dir}/region.parquet')"

@@ -93,6 +93,87 @@ def test_remote_lifecycle_submit_poll_page(served):
         assert t.num_rows == 2
 
 
+def test_each_reply_is_one_write_on_nodelay_sockets(served, monkeypatch):
+    """Every reply leaves the server in ONE sendall on a TCP_NODELAY
+    socket, a fetch reply's JSON frame and Arrow frame together: split
+    into two small writes with Nagle on, the Arrow frame waits for the
+    client's delayed ACK of the JSON frame (about 40 ms a page on
+    Linux). Checked by counting writes, not by timing."""
+    import json
+    import socket
+    import struct
+
+    from chapterhousedb_spark.server import RemoteQueryError, _ipc_to_table
+
+    nodelay = (socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    with _client(served) as c:
+        assert c._sock.getsockopt(*nodelay)
+        (q,) = c.submit("select id from range(30)")
+        assert c.wait(q["query_id"], timeout=120)["status"] == "COMPLETE"
+
+        replies = []  # (server socket's TCP_NODELAY, bytes) per write
+        client_addr = c._sock.getsockname()
+        sendall = socket.socket.sendall
+
+        def recording_sendall(sock, data, *args):
+            try:
+                to_client = sock.getpeername() == client_addr
+            except OSError:
+                to_client = False
+            if to_client:
+                replies.append((sock.getsockopt(*nodelay), bytes(data)))
+            return sendall(sock, data, *args)
+
+        monkeypatch.setattr(socket.socket, "sendall", recording_sendall)
+        page = c.fetch(q["query_id"], offset=5, limit=10)
+        assert c.ping()
+        with pytest.raises(RemoteQueryError, match="unknown query_id"):
+            c.status("nope")
+        assert c.status(q["query_id"])["num_rows"] == 30
+        monkeypatch.undo()
+
+    def frames(data):
+        out, i = [], 0
+        while i < len(data):
+            (n,) = struct.unpack_from(">I", data, i)
+            out.append(data[i + 4 : i + 4 + n])
+            i += 4 + n
+        assert i == len(data)
+        return out
+
+    assert len(replies) == 4  # fetch, ping, error, status
+    assert all(flag for flag, _ in replies)
+    fetch, ping, error, status = (frames(data) for _, data in replies)
+    assert len(fetch) == 2 and json.loads(fetch[0])["arrow"] is True
+    assert _ipc_to_table(fetch[1]).to_pydict() == page.to_pydict()
+    assert page.column("id").to_pylist() == list(range(5, 15))
+    assert [len(f) for f in (ping, error, status)] == [1, 1, 1]
+    assert json.loads(error[0])["ok"] is False
+
+
+def test_frames_reassemble_across_many_reads():
+    """A frame far larger than one recv arrives whole, in order, and a
+    peer closing mid-frame reads as None (the end-of-stream signal the
+    handler and client act on), not as a short frame."""
+    import socket
+    import threading
+
+    from chapterhousedb_spark.server import _read_frame, _write_frames
+
+    big = bytes(range(256)) * 40_000  # ~10 MB, many socket reads
+    a, b = socket.socketpair()
+    with a, b:
+        writer = threading.Thread(target=_write_frames, args=(a, big, b"{}"))
+        writer.start()
+        assert _read_frame(b) == big
+        assert _read_frame(b) == b"{}"
+        writer.join(timeout=30)
+        assert not writer.is_alive()
+        a.sendall(b"\x00\x00\x00\x10" + b"short")
+        a.shutdown(socket.SHUT_WR)
+        assert _read_frame(b) is None
+
+
 def test_remote_error_propagation_and_bad_requests(served):
     """A failing statement lands in status=ERROR with the message
     (query_handler_state.rs:28-35); fetch on a non-COMPLETE query,
