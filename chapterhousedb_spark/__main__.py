@@ -89,8 +89,6 @@ def _repl(
     `statement_timeout` carry the batch-mode flags' semantics:
     per-statement FAIR routing, and cancel-after-deadline (counted per
     submission, like batch mode)."""
-    import time as _time
-
     from chapterhousedb_spark.status import QueryStatus
 
     # input() writes its prompt to stdout, so only go through it when
@@ -130,14 +128,7 @@ def _repl(
                 if it is None:
                     note("-- no result to page; run a statement first")
                 else:
-                    fwd = s.lower() in ("n", "next")
-                    page = it.next_page() if fwd else it.prev_page()
-                    label = "next" if fwd else "prev"
-                    if page is None:
-                        note(f"-- {label}: no page")
-                    else:
-                        note(f"-- {label}: rows={page.num_rows}")
-                        emit(page, first=True)
+                    _browse_step(it, s.lower(), emit=emit, note=note)
                 continue
             if not s:
                 continue
@@ -161,18 +152,9 @@ def _repl(
             print(f"-- error: {ex}", file=sys.stderr)
             rc = 1
             continue
-        submitted_at = _time.monotonic()
+        submitted_at = time.monotonic()
         for h in handles:
-            if statement_timeout is None:
-                h.wait()
-            else:
-                remaining = statement_timeout - (
-                    _time.monotonic() - submitted_at
-                )
-                h.wait(max(remaining, 0.0))
-                if not h.status.terminal():
-                    eng.cancel(h.query_id)
-                    h.wait()
+            _wait_or_cancel(eng, h, statement_timeout, submitted_at)
             note(f"-- {h.status.value}: {h.sql.strip()}")
             if h.status is QueryStatus.ERROR:
                 print(f"-- error: {h.error}", file=sys.stderr)
@@ -210,24 +192,46 @@ def _make_emit_note(fmt: str):
     return emit, note
 
 
+def _wait_or_cancel(
+    eng, h, statement_timeout: float | None, submitted_at: float
+) -> None:
+    """Wait for `h` to reach a terminal status; if it is still running
+    `statement_timeout` seconds (None: never) after `submitted_at` (a
+    time.monotonic() value), cancel it and wait for the cancel.
+    Statements run concurrently from submission, so the deadline counts
+    from submit time — not from when a sequential loop reaches the
+    statement (otherwise statement N could run ~N*timeout before being
+    cancelled)."""
+    if statement_timeout is None:
+        h.wait()
+        return
+    h.wait(max(submitted_at + statement_timeout - time.monotonic(), 0.0))
+    if not h.status.terminal():
+        eng.cancel(h.query_id)
+        h.wait()
+
+
+def _browse_step(it, step: str, *, emit, note, tag: str = "") -> None:
+    """Serve one n/next or p/prev step of the bidirectional browse
+    (reference tui_query_data_iterator.rs:58-143 prev/next flow);
+    `step` is already validated, so anything but n/next is prev."""
+    fwd = step in ("n", "next")
+    page = it.next_page() if fwd else it.prev_page()
+    label = tag + ("next" if fwd else "prev")
+    if page is None:
+        note(f"-- {label}: no page")
+    else:
+        note(f"-- {label}: rows={page.num_rows}")
+        emit(page, first=True)
+
+
 def _page_result(it, total_rows, *, browse, max_pages, page_size, emit, note):
     """Page one completed statement's result — either the explicit
-    bidirectional --browse sequence (reference
-    tui_query_data_iterator.rs:58-143 prev/next flow) or forward to
-    the end. Works over any iterator with next_page/prev_page, local
-    (results.QueryDataIterator) or remote (server._RemoteDataIterator)."""
+    bidirectional --browse sequence or forward to the end. Works over
+    any results.QueryDataIterator, local or from QueryClient.iterator."""
     if browse is not None:
         for step in browse.split(","):
-            s = step.strip().lower()
-            if s in ("n", "next"):
-                page, label = it.next_page(), "next"
-            else:  # validated at parse time: only p/prev left
-                page, label = it.prev_page(), "prev"
-            if page is None:
-                note(f"-- browse {label}: no page")
-            else:
-                note(f"-- browse {label}: rows={page.num_rows}")
-                emit(page, first=True)
+            _browse_step(it, step.strip().lower(), emit=emit, note=note, tag="browse ")
         note(f"-- {total_rows} row(s) total")
         return
     n_pages = 0
@@ -510,22 +514,9 @@ def main(argv: list[str] | None = None) -> int:
         # file's statements through one connection), then page each in
         # submission order as it completes
         handles = eng.sql(text, pool=args.pool)
-        # statements run CONCURRENTLY from submission, so each one's
-        # deadline counts from submit time — not from when this
-        # sequential paging loop reaches it (otherwise statement N
-        # could run ~N*timeout before being cancelled)
         submitted_at = time.monotonic()
         for i, h in enumerate(handles):
-            if args.statement_timeout is None:
-                h.wait()
-            else:
-                remaining = args.statement_timeout - (
-                    time.monotonic() - submitted_at
-                )
-                h.wait(max(remaining, 0.0))
-            if args.statement_timeout is not None and not h.status.terminal():
-                eng.cancel(h.query_id)
-                h.wait()
+            _wait_or_cancel(eng, h, args.statement_timeout, submitted_at)
             note(f"-- [{i + 1}/{len(handles)}] {h.status.value}: {h.sql.strip()}")
             if h.status is QueryStatus.ERROR:
                 print(f"-- error: {h.error}", file=sys.stderr)

@@ -147,7 +147,9 @@ class QueryDataIterator:
 
     Pages form a fixed grid: page k covers rows
     [k*page_size, (k+1)*page_size). next_page serves the next page
-    forward, prev_page the one before the last page served.
+    forward, prev_page the one before the last page served. The cursor
+    is anything with `total_rows` and `fetch(offset, limit)`: a
+    ResultCursor, or the server client's cursor over the wire.
     """
 
     def __init__(self, cursor: ResultCursor, page_size: int = 50):

@@ -58,6 +58,8 @@ import threading
 
 import pyarrow as pa
 
+from chapterhousedb_spark.results import QueryDataIterator
+
 _MAX_FRAME = 64 * 1024 * 1024  # defensive cap for REQUEST frames
 _MAX_WAIT_S = 60.0  # per-request bound on status wait_s
 
@@ -341,10 +343,10 @@ class QueryClient:
     def total_rows(self, query_id: str) -> int:
         return self.status(query_id)["num_rows"]
 
-    def iterator(self, query_id: str, page_size: int = 50):
-        """Bidirectional pager over the remote result with the same
-        fixed-grid contract as results.QueryDataIterator (page k =
-        rows [k*page_size, (k+1)*page_size)). Mirrors Engine.iterator's
+    def iterator(self, query_id: str, page_size: int = 50) -> QueryDataIterator:
+        """results.QueryDataIterator over the remote result — the remote
+        twin of the reference TUI's data iterator
+        (client/tui_query_data_iterator.rs). Mirrors Engine.iterator's
         error contract: a non-COMPLETE query raises instead of paging
         an empty snapshot (round-15 review finding)."""
         st = self.status(query_id)
@@ -352,7 +354,9 @@ class QueryClient:
             raise RemoteQueryError(
                 f"query {query_id} not complete (status={st['status']})"
             )
-        return _RemoteDataIterator(self, query_id, page_size, st["num_rows"])
+        return QueryDataIterator(
+            _RemoteCursor(self, query_id, st["num_rows"]), page_size
+        )
 
     def cancel(self, query_id: str) -> bool:
         return self._call({"op": "cancel", "query_id": query_id})[0][
@@ -379,40 +383,17 @@ class QueryClient:
         self.close()
 
 
-class _RemoteDataIterator:
-    """results.QueryDataIterator over the wire: same paging grid, pages
-    fetched lazily by offset — the remote twin of the reference TUI's
-    data iterator (client/tui_query_data_iterator.rs)."""
+class _RemoteCursor:
+    """The two members of results.ResultCursor that QueryDataIterator
+    pages through, served over the wire: one fetch request per page."""
 
-    def __init__(
-        self,
-        client: QueryClient,
-        query_id: str,
-        page_size: int,
-        total_rows: int,
-    ):
+    def __init__(self, client: QueryClient, query_id: str, total_rows: int):
         self._client = client
         self._query_id = query_id
-        self.page_size = page_size
-        self._total = total_rows
-        self._next = 0
+        self.total_rows = total_rows
 
-    def next_page(self) -> pa.Table | None:
-        if self._next * self.page_size >= (self._total or 0):
-            return None
-        t = self._client.fetch(
-            self._query_id, self._next * self.page_size, self.page_size
-        )
-        self._next += 1
-        return t
-
-    def prev_page(self) -> pa.Table | None:
-        if self._next < 2:
-            return None
-        self._next -= 1
-        return self._client.fetch(
-            self._query_id, (self._next - 1) * self.page_size, self.page_size
-        )
+    def fetch(self, offset: int, limit: int) -> pa.Table:
+        return self._client.fetch(self._query_id, offset, limit)
 
 
 class RemoteQueryHandle:

@@ -1,12 +1,20 @@
-"""SQL front door: statement splitting + read_files() rewriting.
+"""SQL front door: one lexer, statement splitting and table-function
+rewriting.
 
 This is the thin layer the reference implements with the sqlparser crate
 (reference src/planner/logical_planner.rs:209-216) before its own
-planner. Here everything after the rewrite is handed to spark.sql() and
+planner. `splitter.lex` follows Spark's lexer and is the only code that
+knows where literals, quoted identifiers and comments start and end:
+'...' and "..." strings (backslash escapes the next character, a
+doubled quote is a quote), r'...' / R"..." raw strings, `...`
+identifiers (a doubled backtick is a backtick), -- line comments and
+nesting /* */ comments, each running to the end of the text when
+unterminated. `split_statements` splits on ';' and
+`TableFunctionRegistry.rewrite` replaces table-function calls, both in
+code only. Everything after the rewrite is handed to spark.sql() and
 planned by Catalyst.
 """
 
-from chapterhousedb_spark.sqlfront.read_files import ReadFilesCall, rewrite_read_files
 from chapterhousedb_spark.sqlfront.splitter import split_statements
 from chapterhousedb_spark.sqlfront.table_funcs import (
     TableFuncCall,
@@ -14,17 +22,13 @@ from chapterhousedb_spark.sqlfront.table_funcs import (
     TableFunction,
     TableFunctionRegistry,
     default_table_function_registry,
-    rewrite_table_funcs,
 )
 
 __all__ = [
-    "ReadFilesCall",
     "TableFuncCall",
     "TableFuncSyntaxError",
     "TableFunction",
     "TableFunctionRegistry",
     "default_table_function_registry",
-    "rewrite_read_files",
-    "rewrite_table_funcs",
     "split_statements",
 ]

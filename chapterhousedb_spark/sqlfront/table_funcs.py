@@ -7,23 +7,37 @@ src/handlers/operator_handler/operator_task_registry.rs:106-126,
 `add_table_func_task_builder` + `TableFuncSyntaxValidator`;
 `read_files` is the sole registered entry there, registry.rs:196-210).
 
-Here a TableFunction pairs a validator (allowed named args) with a
-builder that turns a parsed call into a DataFrame; the registry rewrites
-every registered `func('<glob>' [, name=>'value']...)` call site into a
-generated temp-view reference before the statement reaches spark.sql().
-Built-ins: `read_files` (parquet, the reference's function) and
-`read_csv` (the reference's README.md:63-66 unchecked roadmap box —
-proving the plug point).
+The reference implements read_files as a registered table-function task
+that lists storage by glob prefix and streams parquet batches (reference
+src/handlers/operator_handler/operators/table_func_tasks/read_files_task.rs:65-114
+for arg parsing, 156-232 for the list+match loop). Spark reads parquet
+globs natively, so the whole operator collapses to a pre-parse rewrite:
+`TableFunctionRegistry.rewrite` replaces every registered
+`func('<glob>' [, name=>'value']...)` call site in code (never inside a
+literal, quoted identifier or comment, as `splitter.lex` marks them)
+with a generated table reference, and the engine registers the call's
+DataFrame (for read_files, `spark.read.parquet(resolved_glob)`) as a
+temp view under that name. Catalyst then gets predicate pushdown,
+column pruning and partition pruning on the scan for free (all absent
+in the reference — SURVEY.md §4.1).
+
+A TableFunction pairs a validator (allowed named args) with a builder
+that turns a parsed call into a DataFrame. Built-ins: `read_files`
+(parquet, the reference's function, plus csv/json), `read_csv` and
+`read_json` (the reference's README.md:63-66 unchecked roadmap boxes —
+proving the plug point), and the operator-library functions below.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
+
+from chapterhousedb_spark.sqlfront.splitter import CODE, QUOTED, lex
 
 if TYPE_CHECKING:
     from chapterhousedb_spark.config import ConnectionRegistry
@@ -78,129 +92,61 @@ class TableFunction:
 
 # ------------------------------------------------------------ arg parsing
 
-_FIRST_ARG_RE = re.compile(r"^\s*'(?P<glob>(?:[^']|'')*)'\s*(?P<rest>.*)$", re.DOTALL)
-_NAMED_ARG_RE = re.compile(
-    r"\s*,\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*=>\s*'(?P<val>(?:[^']|'')*)'\s*"
-)
+_NAMED_ARG_RE = re.compile(r"\s*,\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*=>\s*")
+_ESCAPE_RE = re.compile(r"''|\\.", re.DOTALL)
+_PAREN_RE = re.compile(r"[()]")
+
+
+def _unquote(literal: str) -> str:
+    """Body of a '...' literal with '' and \\' decoded to '; every other
+    backslash pair stays as written (a glob's own escapes, like \\*)."""
+    return _ESCAPE_RE.sub(
+        lambda m: "'" if m.group() in ("''", "\\'") else m.group(), literal[1:-1]
+    )
 
 
 def parse_call_args(func: str, arg_text: str) -> tuple[str, dict[str, str]]:
     """Parse `'<glob>' [, name=>'value']...` (the argument grammar of the
     reference's read_files, read_files_task.rs:65-114, generalized to
-    any named args — each function's whitelist is checked separately)."""
-    m = _FIRST_ARG_RE.match(arg_text)
-    if not m:
+    any named args — each function's whitelist is checked separately).
+    The literals' extents come from the front door's lexer."""
+    literals = [(kind, a, b) for kind, a, b in lex(arg_text) if kind != CODE]
+    if (
+        not literals
+        or arg_text[: literals[0][1]].strip()
+        or any(kind != QUOTED or arg_text[a] != "'" for kind, a, _ in literals)
+    ):
         raise TableFuncSyntaxError(
             f"{func} arguments must be '<glob>' [, name=>'value']...; got: {arg_text!r}"
         )
-    glob = m.group("glob").replace("''", "'")
-    rest = m.group("rest").rstrip()
     named: dict[str, str] = {}
-    pos = 0
-    while pos < len(rest):
-        nm = _NAMED_ARG_RE.match(rest, pos)
+    for (_, _, prev_end), (_, a, b) in zip(literals, literals[1:]):
+        nm = _NAMED_ARG_RE.fullmatch(arg_text, prev_end, a)
         if not nm:
             raise TableFuncSyntaxError(
-                f"{func}: malformed named argument near {rest[pos:]!r}"
+                f"{func}: malformed named argument near {arg_text[prev_end:]!r}"
             )
-        named[nm.group("name").lower()] = nm.group("val").replace("''", "'")
-        pos = nm.end()
-    return glob, named
+        named[nm.group("name").lower()] = _unquote(arg_text[a:b])
+    tail = arg_text[literals[-1][2] :]
+    if tail.strip():
+        raise TableFuncSyntaxError(f"{func}: malformed named argument near {tail!r}")
+    _, a, b = literals[0]
+    return _unquote(arg_text[a:b]), named
 
 
-# --------------------------------------------------------------- rewriting
-
-
-def _scan_literal_spans(sql: str) -> list[tuple[int, int]]:
-    """Spans of string literals/comments where calls must be ignored."""
-    spans = []
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, j + 1))
-            i = j + 1
-        elif sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            spans.append((i, j))
-            i = j
-        elif sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def rewrite_table_funcs(
-    sql: str, names: list[str], view_prefix: str = "__tf"
-) -> tuple[str, list[TableFuncCall]]:
-    """Replace every registered-function call with a generated view name.
-
-    Returns (rewritten_sql, calls); the caller builds each call's
-    DataFrame and registers it as a temp view named call.view_name.
-    """
-    if not names:
-        return sql, []
-    # longest-first so a name that prefixes another can't shadow it
-    ordered = sorted(names, key=len, reverse=True)
-    call_re = re.compile(
-        r"\b(" + "|".join(re.escape(n) for n in ordered) + r")\s*\(", re.IGNORECASE
-    )
-    spans = _scan_literal_spans(sql)
-
-    def in_literal(pos: int) -> bool:
-        return any(a <= pos < b for a, b in spans)
-
-    out: list[str] = []
-    calls: list[TableFuncCall] = []
-    last = 0
-    for m in call_re.finditer(sql):
-        if in_literal(m.start()):
-            continue
-        func = m.group(1).lower()
-        # find the matching close paren, honoring quotes
-        depth, i, n = 1, m.end(), len(sql)
-        while i < n and depth:
-            c = sql[i]
-            if c == "'":
-                j = i + 1
-                while j < n:
-                    if sql[j] == "'":
-                        if j + 1 < n and sql[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                i = j + 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise TableFuncSyntaxError(f"unterminated {func}(...) call")
-        glob, named = parse_call_args(func, sql[m.end() : i - 1])
-        view = f"{view_prefix}_{len(calls)}"
-        calls.append(
-            TableFuncCall(func=func, glob=glob, named_args=named, view_name=view)
-        )
-        out.append(sql[last : m.start()])
-        out.append(view)
-        last = i
-    out.append(sql[last:])
-    return "".join(out), calls
+def _closing_paren(
+    sql: str, code: list[tuple[int, int]], k: int, pos: int
+) -> tuple[int, int] | None:
+    """(code-span index, end) of the ')' closing a '(' just before `pos`
+    in code span k, counting parentheses in code spans only."""
+    depth = 1
+    for k in range(k, len(code)):
+        a, b = code[k]
+        for m in _PAREN_RE.finditer(sql, max(a, pos), b):
+            depth += 1 if m.group() == "(" else -1
+            if not depth:
+                return k, m.end()
+    return None
 
 
 # ---------------------------------------------------------------- registry
@@ -230,10 +176,47 @@ class TableFunctionRegistry:
     def rewrite(
         self, sql: str, view_prefix: str = "__tf"
     ) -> tuple[str, list[TableFuncCall]]:
-        rewritten, calls = rewrite_table_funcs(sql, self.names(), view_prefix)
-        for call in calls:
-            self.get(call.func).validate(call)
-        return rewritten, calls
+        """Replace every registered-function call in code with a
+        generated view name `<view_prefix>_<i>` and validate its
+        arguments. Returns (rewritten_sql, calls); the caller builds
+        each call's DataFrame and registers it as a temp view named
+        call.view_name."""
+        if not self._funcs:
+            return sql, []
+        # longest-first so a name that prefixes another can't shadow it
+        ordered = sorted(self._funcs, key=len, reverse=True)
+        call_re = re.compile(
+            r"\b(" + "|".join(re.escape(n) for n in ordered) + r")\s*\(",
+            re.IGNORECASE,
+        )
+        code = [(a, b) for kind, a, b in lex(sql) if kind == CODE]
+        out: list[str] = []
+        calls: list[TableFuncCall] = []
+        last = k = 0
+        while k < len(code):
+            m = call_re.search(sql, max(code[k][0], last), code[k][1])
+            if m is None:
+                k += 1
+                continue
+            func = m.group(1).lower()
+            closed = _closing_paren(sql, code, k, m.end())
+            if closed is None:
+                raise TableFuncSyntaxError(f"unterminated {func}(...) call")
+            k, end = closed
+            glob, named = parse_call_args(func, sql[m.end() : end - 1])
+            call = TableFuncCall(
+                func=func,
+                glob=glob,
+                named_args=named,
+                view_name=f"{view_prefix}_{len(calls)}",
+            )
+            self._funcs[func].validate(call)
+            calls.append(call)
+            out.append(sql[last : m.start()])
+            out.append(call.view_name)
+            last = end
+        out.append(sql[last:])
+        return "".join(out), calls
 
 
 # --------------------------------------------------------------- built-ins
@@ -329,13 +312,9 @@ def _build_read_files(
 def _build_read_csv(
     spark: SparkSession, connections: "ConnectionRegistry", call: TableFuncCall
 ) -> DataFrame:
-    path = connections.resolve(call.glob, call.connection)
-    return (
-        spark.read.option("header", call.named_args.get("header", "true"))
-        .option("sep", call.named_args.get("delimiter", ","))
-        .option("inferSchema", call.named_args.get("infer_schema", "true"))
-        .csv(path)
-    )
+    # a comma even for a .tsv glob, which read_files would read tab-separated
+    args = {"delimiter": ",", **call.named_args, "format": "csv"}
+    return _build_read_files(spark, connections, replace(call, named_args=args))
 
 
 READ_FILES = TableFunction(
@@ -364,11 +343,8 @@ READ_CSV = TableFunction(
 def _build_read_json(
     spark: SparkSession, connections: "ConnectionRegistry", call: TableFuncCall
 ) -> DataFrame:
-    path = connections.resolve(call.glob, call.connection)
-    reader = spark.read
-    if call.named_args.get("multiline", "false") == "true":
-        reader = reader.option("multiLine", "true")
-    return reader.json(path)
+    args = {**call.named_args, "format": "json"}
+    return _build_read_files(spark, connections, replace(call, named_args=args))
 
 
 READ_JSON = TableFunction(

@@ -512,6 +512,16 @@ def test_engine_vacuum_drops_old_terminal_results(spark, tmp_path):
     eng.close()
 
 
+def test_table_function_inside_string_literal_is_not_called(spark, tmp_path):
+    """A call spelled inside a double-quoted string stays a string: no
+    read of the path it names."""
+    eng = Engine(spark=spark, results_dir=str(tmp_path / "res"))
+    [h] = eng.sql_wait("select \"read_files('nope.parquet')\" as s")
+    assert h.status is QueryStatus.COMPLETE, h.error
+    assert eng.fetch(h.query_id).to_pydict() == {"s": ["read_files('nope.parquet')"]}
+    eng.close()
+
+
 def test_diff_tables_table_function(spark, sf_dir, tmp_path_factory):
     """operators exposed at the SQL front door: diff_tables() runs the
     key-level version diff from plain SQL through the registry — the

@@ -12,10 +12,12 @@ from chapterhousedb_spark.sqlfront import (
     TableFuncSyntaxError,
     TableFunction,
     default_table_function_registry,
-    rewrite_read_files,
     split_statements,
 )
-from chapterhousedb_spark.sqlfront.read_files import ReadFilesSyntaxError
+
+
+def _rewrite(sql):
+    return default_table_function_registry().rewrite(sql, view_prefix="__read_files")
 
 
 class TestSplitStatements:
@@ -49,10 +51,25 @@ class TestSplitStatements:
         stmts = split_statements('select "a;b" from t; select 2')
         assert len(stmts) == 2
 
+    def test_backquoted_identifier(self):
+        assert split_statements("select 1 as `a;b`") == ["select 1 as `a;b`"]
+
+    def test_backslash_escaped_quote_inside_string(self):
+        sql = r"select 'it\'s; fine' as s"
+        assert split_statements(sql) == [sql]
+
+    def test_nested_block_comment(self):
+        sql = "select 1 /* a /* b */ ; */ as x"
+        assert split_statements(sql) == [sql]
+
+    def test_raw_string_keeps_trailing_backslash(self):
+        stmts = split_statements(r"select r'C:\dir\' as s, 'x;y' as t; select 2")
+        assert stmts == [r"select r'C:\dir\' as s, 'x;y' as t", "select 2"]
+
 
 class TestRewriteReadFiles:
     def test_basic(self):
-        sql, calls = rewrite_read_files(
+        sql, calls = _rewrite(
             "select * from read_files('data/*.parquet')"
         )
         assert sql == "select * from __read_files_0"
@@ -61,34 +78,49 @@ class TestRewriteReadFiles:
         assert calls[0].connection is None
 
     def test_connection_named_arg(self):
-        sql, calls = rewrite_read_files(
+        sql, calls = _rewrite(
             "select * from READ_FILES('simple/*.parquet', connection=>'s3_dev')"
         )
         assert calls[0].connection == "s3_dev"
         assert "__read_files_0" in sql
 
     def test_multiple_calls(self):
-        sql, calls = rewrite_read_files(
+        sql, calls = _rewrite(
             "select * from read_files('a/*.parquet') t1, read_files('b/*.parquet') t2"
         )
         assert [c.view_name for c in calls] == ["__read_files_0", "__read_files_1"]
         assert "__read_files_0 t1" in sql and "__read_files_1 t2" in sql
 
     def test_ignores_inside_string_literal(self):
-        sql, calls = rewrite_read_files("select 'read_files(''x'')' as s")
+        sql, calls = _rewrite("select 'read_files(''x'')' as s")
         assert calls == []
         assert sql == "select 'read_files(''x'')' as s"
 
     def test_quote_escape_in_glob(self):
-        _, calls = rewrite_read_files("select * from read_files('it''s/*.parquet')")
+        _, calls = _rewrite("select * from read_files('it''s/*.parquet')")
         assert calls[0].glob == "it's/*.parquet"
 
+    def test_backslash_quote_escape_in_glob(self):
+        _, calls = _rewrite(r"select * from read_files('a\'b.parquet')")
+        assert calls[0].glob == "a'b.parquet"
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            """select "read_files('nope.parquet')" as s""",
+            "select `read_files('t')` from t",
+            r"select 'it\'s read_files(''x.parquet'')' as s",
+        ],
+    )
+    def test_ignores_inside_quotes(self, sql):
+        assert _rewrite(sql) == (sql, [])
+
     def test_bad_args_raise(self):
-        with pytest.raises(ReadFilesSyntaxError):
-            rewrite_read_files("select * from read_files(42)")
+        with pytest.raises(TableFuncSyntaxError):
+            _rewrite("select * from read_files(42)")
 
     def test_no_call_passthrough(self):
-        sql, calls = rewrite_read_files("select 1 as x")
+        sql, calls = _rewrite("select 1 as x")
         assert sql == "select 1 as x" and calls == []
 
 

@@ -1,9 +1,10 @@
 """Property-based tests (hypothesis) for the SQL front door.
 
-The splitter and rewriter are hand-rolled scanners (quote/comment state
-machines); properties catch the corner cases example tests miss:
-statement round-trips, quote-escape handling in globs, literals never
-rewritten.
+The splitter and the rewriter both read SQL through one lexer
+(splitter.lex: strings, raw strings, quoted identifiers and comments);
+properties catch the corner cases example tests miss: statement
+round-trips, quote-escape handling in globs, and text inside any quoted
+span or comment never split or rewritten.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from chapterhousedb_spark.sqlfront import (
-    rewrite_read_files,
+    default_table_function_registry,
     split_statements,
 )
 
@@ -24,6 +25,9 @@ _plain = st.text(
     min_size=1,
     max_size=60,
 ).filter(lambda s: s.strip())
+
+# (open, close) of every span the lexer keeps out of code
+_WRAPS = [("'", "'"), ('"', '"'), ("`", "`"), ("-- ", "\n"), ("/* ", " */")]
 
 # glob paths, including single quotes (embedded doubled) and glob chars
 _glob = st.text(
@@ -42,10 +46,15 @@ def test_split_round_trips_plain_statements(stmts):
     assert split_statements(joined) == [s.strip() for s in stmts]
 
 
+def _rewrite(sql, view_prefix="__read_files"):
+    return default_table_function_registry().rewrite(sql, view_prefix=view_prefix)
+
+
 @settings(max_examples=200, deadline=None)
-@given(_plain, _plain)
-def test_split_ignores_semicolons_inside_literals(a, b):
-    text = f"select '{a.replace(chr(39), '')}; not a split' as x; select {b}"
+@given(_plain, _plain, st.sampled_from(_WRAPS))
+def test_split_ignores_semicolons_inside_literals(a, b, wrap):
+    opener, closer = wrap
+    text = f"select {opener}{a}; not a split{closer} as x; select {b}"
     out = split_statements(text)
     assert len(out) == 2
     assert out[0].endswith("as x")
@@ -59,7 +68,7 @@ def test_rewrite_recovers_planted_globs(globs):
         for i, g in enumerate(globs)
     )
     sql = f"select * from {calls_sql}"
-    rewritten, calls = rewrite_read_files(sql, view_prefix="__v")
+    rewritten, calls = _rewrite(sql, view_prefix="__v")
     assert [c.glob for c in calls] == globs
     assert "read_files" not in rewritten.lower()  # every call site replaced
     for c in calls:
@@ -67,10 +76,13 @@ def test_rewrite_recovers_planted_globs(globs):
 
 
 @settings(max_examples=200, deadline=None)
-@given(_glob)
-def test_rewrite_never_touches_string_literals(g):
+@given(_glob, st.sampled_from(_WRAPS))
+def test_rewrite_never_touches_string_literals(g, wrap):
+    opener, closer = wrap
     lit = f"read_files('{g.replace(chr(39), chr(39) * 2)}')"
-    sql = f"select '{lit.replace(chr(39), chr(39) * 2)}' as s"
-    rewritten, calls = rewrite_read_files(sql)
+    if opener == "'":
+        lit = lit.replace(chr(39), chr(39) * 2)
+    sql = f"select {opener}{lit}{closer} as s"
+    rewritten, calls = _rewrite(sql)
     assert calls == []
     assert rewritten == sql
