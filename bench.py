@@ -223,19 +223,19 @@ _HISTORY_FILE = "BENCH_HISTORY.jsonl"
 # the primary host normalizer is the suite-median ratio vs the previous
 # record (_suite_ratio_median); the spark.range probe's median swung 5x
 # across same-day runs while raw suite totals moved <10%, so probe-pair
-# normalization manufactures regressions in either direction. The probe
-# factors below remain recorded for cross-record comparability with the
-# r4-r14 artifacts.
+# normalization manufactures regressions in either direction. The
+# median-anchored probe factor remains recorded for cross-record
+# comparability with the r4-r14 artifacts.
 # The COLD anchor is the driver's round-4 calibration
 # triple (BENCH_r04.json, committed as the canonical anchor in BASELINE.md
-# §host-calibration): host_factor_cold = this run's first spark_range_sum
-# sample / anchor. The cold sample includes codegen compilation and swung
+# §host-calibration): a record's first spark_range_sum sample / anchor is
+# the host factor of the BENCH_r*.json wrappers _previous_round_times
+# falls back to. The cold sample includes codegen compilation and swung
 # 0.866 -> 2.502 across adjacent same-host records (VERDICT r12 #3), so from
 # round 13 the HEADLINE host_factor is median-anchored instead: the warm
 # median probe / the cross-record typical warm median below (history shows
 # 0.152-0.272 across r7-r12 same-host records, median ~0.20, vs the two
-# load-spike outliers 0.389/0.869). The cold factor stays reported as a
-# separate constant for anchor comparability with r4-r12 records.
+# load-spike outliers 0.389/0.869).
 _ANCHOR_SPARK_RANGE_SUM_SEC = 1.164
 _ANCHOR_SPARK_RANGE_SUM_MEDIAN_SEC = 0.200
 
@@ -917,130 +917,7 @@ def _history_entry(payload: dict, record_name: str) -> dict:
     }
 
 
-# --scale-probe (VERDICT r15 #5): sf0.1 cannot demonstrate parallel
-# speedup — at ~600k total rows every query is bound by per-job
-# scheduler/FS constants and 8 cores beats 32 across the board, so the
-# fan-out/shuffle work can only be judged from plan shapes there. This
-# mode makes core scaling falsifiable: it inflates the sf0.1 corpus
-# ~10x (sf1-sized, ~50k docs — generated under /tmp, never committed)
-# and times the compute-dense fanned-out queries at local[8] vs
-# local[32] in separate subprocesses. Ratios (wall@8 / wall@32,
-# repeat walls) meaningfully above 1 confirm the map-heavy stages
-# actually use the extra cores once there is data to chew.
-_SCALE_PROBE_QUERIES = [
-    "pipeline_pretrain",
-    "dedup_clusters_star",
-    "pipeline_ccnet",
-    "dsir_weights",
-    "dedup_minhash",
-]
-_SCALE_PROBE_COPIES = 9  # 1 original + 9 perturbed = 10x rows
-_SCALE_PROBE_DIR = "/tmp/chdb_scale_probe_sf1"
-
-
-def _scale_probe_child(data_dir: str) -> None:
-    """Child mode: generate the inflated corpus if missing (outside
-    every timed window), then run each probe query twice at the core
-    count build_session reads from SPARK_GRAFT_CPUS. Prints one JSON
-    line."""
-    from pyspark.sql import functions as F
-
-    from chapterhousedb_spark.operators.dedup import (
-        release_self_join_caches,
-    )
-
-    spark = build_session(app_name="chdb-scale-probe")
-    done = os.path.join(data_dir, "_DONE")
-    if not os.path.exists(done):
-        docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-        out = docs.select("doc_id", "text")
-        for r in range(1, _SCALE_PROBE_COPIES + 1):
-            out = out.unionByName(
-                docs.select(
-                    (F.col("doc_id") + F.lit(r * 10_000_000)).alias(
-                        "doc_id"
-                    ),
-                    F.concat(
-                        F.col("text"),
-                        F.lit(f" scale probe tail {r} variant"),
-                    ).alias("text"),
-                )
-            )
-        out.repartition(8).write.mode("overwrite").parquet(
-            os.path.join(data_dir, "documents.parquet")
-        )
-        with open(done, "w") as f:
-            f.write("ok\n")
-    QUERIES["dedup_exact"](spark, data_dir).limit(1).collect()  # warmup
-    walls: dict[str, list[float]] = {}
-    for name in _SCALE_PROBE_QUERIES:
-        walls[name] = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, data_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            walls[name].append(round(time.perf_counter() - t0, 2))
-            release_self_join_caches()
-    print(json.dumps({"scale_probe_child": True, "walls": walls}))
-
-
-def _scale_probe_main() -> None:
-    """Parent: run the child at 32 then 8 cores (32 first so it
-    generates the shared inflated corpus), compute wall@8 / wall@32
-    ratios from the repeat walls, persist BENCH_SCALING_r{N}.json and
-    print one JSON line."""
-    import subprocess
-
-    os.makedirs(_SCALE_PROBE_DIR, exist_ok=True)
-    here = os.path.dirname(os.path.abspath(__file__))
-    out: dict = {"sf_inflation": _SCALE_PROBE_COPIES + 1, "cores": {}}
-    for cpus in (32, 8):
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--scale-probe-child", _SCALE_PROBE_DIR],
-            env=env, capture_output=True, text=True, cwd=here,
-        )
-        line = [
-            ln for ln in proc.stdout.splitlines()
-            if ln.startswith('{"scale_probe_child"')
-        ]
-        if proc.returncode != 0 or not line:
-            print(json.dumps({
-                "scale_probe": True, "error":
-                f"child@{cpus} rc={proc.returncode}",
-                "stderr_tail": proc.stderr[-500:],
-            }))
-            return
-        out["cores"][str(cpus)] = json.loads(line[-1])["walls"]
-    ratios = {}
-    for name in _SCALE_PROBE_QUERIES:
-        w32 = out["cores"]["32"][name]
-        w8 = out["cores"]["8"][name]
-        # repeat walls: the cold first walls carry per-session codegen
-        ratios[name] = round(w8[-1] / max(w32[-1], 1e-9), 2)
-    out["ratio_8c_over_32c_repeat"] = ratios
-    payload = {"scale_probe": True, **out}
-    n = _current_round_n()
-    try:
-        with open(
-            os.path.join(here, f"BENCH_SCALING_r{n}.json"), "w"
-        ) as f:
-            json.dump(payload, f, indent=1)
-            f.write("\n")
-    except OSError:
-        pass
-    print(json.dumps(payload))
-
-
 def main() -> None:
-    if "--scale-probe-child" in sys.argv:
-        _scale_probe_child(sys.argv[sys.argv.index("--scale-probe-child") + 1])
-        return
-    if "--scale-probe" in sys.argv:
-        _scale_probe_main()
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = build_session(app_name="chdb-bench")
     sink_root = tempfile.mkdtemp(prefix="chdb_bench_")
@@ -1067,7 +944,7 @@ def main() -> None:
             )
         total = round(sum(times.values()), 3)
         sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-        prev_n, prev, prev_factor, prev_median, prev_repeats = (
+        prev_n, prev, _, _, prev_repeats = (
             _previous_round_times(sf=float(sf) if sf else None)
         )
         deltas = {
@@ -1095,30 +972,13 @@ def main() -> None:
             for q in times
             if q in prev
         }
-        # probe diagnostics (never divisors from r15): the median-
-        # anchored and cold-anchored factors keep cross-record
-        # comparability with r4-r14, and the probe-pair-normalized
-        # deltas record what the retired normalizer would have said.
+        # probe diagnostic (never a divisor from r15): the median-
+        # anchored factor keeps cross-record comparability with r4-r14.
         host_factor = round(
             calibration["spark_range_sum_median_sec"]
             / _ANCHOR_SPARK_RANGE_SUM_MEDIAN_SEC,
             3,
         )
-        host_factor_cold = round(
-            calibration["spark_range_sum_sec"] / _ANCHOR_SPARK_RANGE_SUM_SEC, 3
-        )
-        if prev_median:
-            f_probe_now = round(
-                calibration["spark_range_sum_median_sec"] / prev_median, 3
-            )
-            f_probe_prev = 1.0
-        else:
-            f_probe_now, f_probe_prev = host_factor_cold, (prev_factor or 1.0)
-        deltas_probe = {
-            q: round(times[q] / f_probe_now - prev[q] / f_probe_prev, 3)
-            for q in times
-            if q in prev
-        }
         # same-round self-adjudication: when a complete record of THIS
         # round already exists in-repo (the builder's idle-host run),
         # record median-normalized deltas against it — same code, so
@@ -1202,13 +1062,9 @@ def main() -> None:
             "deltas_vs_prev": deltas,
             "host_factor": host_factor,
             "host_factor_kind": "probe_diagnostic",
-            "host_factor_cold": host_factor_cold,
-            "prev_host_factor": prev_factor,
-            "host_factor_vs_prev": f_probe_now,
             "suite_ratio_median_vs_prev": round(r_med, 3),
             "host_norm_kind": norm_kind,
             "deltas_vs_prev_host_normalized": deltas_norm,
-            "deltas_vs_prev_probe_normalized": deltas_probe,
             "same_round": same_block,
             "flags": flags,
             "regressions": regressions,

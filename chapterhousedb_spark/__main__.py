@@ -58,6 +58,20 @@ def _format_page(page: pa.Table, *, header: bool) -> str:
     return "\n".join(out)
 
 
+def _ends_statement(text: str) -> bool:
+    """True when the last code in `text`, past trailing comments and
+    whitespace, ends in ';' — so a ';' inside a string or comment that
+    spans lines does not end the REPL's buffered statement."""
+    from chapterhousedb_spark.sqlfront.splitter import CODE, COMMENT, lex
+
+    for kind, a, b in reversed(lex(text)):
+        code = text[a:b].rstrip()
+        if kind == COMMENT or not code:
+            continue
+        return kind == CODE and code.endswith(";")
+    return False
+
+
 def _repl(
     eng,
     *,
@@ -77,10 +91,10 @@ def _repl(
     BOTH directions — while staying pipe-scriptable (tests drive it
     through stdin like any shell).
 
-    Protocol: statements end with ';' (multi-line input buffers until
-    then); 'n'/'p' page the latest result forward/backward (the
-    prev/next flow of tui_query_data_iterator.rs:58-143); '\\explain
-    <sql>;' prints the optimized plan; '\\q' (or EOF) exits. On a tty,
+    Protocol: statements end with a code ';' (multi-line input buffers
+    until then, past any ';' inside a string or comment); 'n'/'p' page
+    the latest result forward/backward (the prev/next flow of
+    tui_query_data_iterator.rs:58-143); '\\explain <sql>;' prints the optimized plan; '\\q' (or EOF) exits. On a tty,
     input goes through input() so readline line editing and history
     actually hook in (prompts on stdout — a human is watching); piped
     input reads sys.stdin with no prompts, so stdout carries exactly
@@ -133,9 +147,9 @@ def _repl(
             if not s:
                 continue
         buf.append(line)
-        if not s.endswith(";"):
-            continue
         text = "\n".join(buf)
+        if not _ends_statement(text):
+            continue
         buf.clear()
         lstripped = text.lstrip()
         if lstripped.lower().startswith("\\explain"):

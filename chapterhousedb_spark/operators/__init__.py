@@ -7,249 +7,8 @@ primitives: built-in higher-order functions on the hot path (JVM-side,
 whole-stage codegen), shuffle-based candidate generation (never
 driver-side loops), Pandas UDFs only where Python is genuinely needed
 (multimodal decode).
+
+Import each operator from its submodule (`...operators.dedup`, ...).
+This package imports none of them, so a Python worker that unpickles a
+UDF from one submodule loads that module alone.
 """
-
-from chapterhousedb_spark.operators.asof import asof_join
-from chapterhousedb_spark.operators.dedup import (
-    char_shingle_posts,
-    contamination_pairs,
-    contamination_short_probes,
-    duplicate_spans,
-    exact_dedup,
-    line_dedup,
-    lsh_tune,
-    minhash_near_dup_pairs,
-    minhash_near_dup_pairs_cross,
-    minhash_near_dup_pairs_cross_sigs,
-    minhash_signature,
-    ngram_jaccard_pairs,
-    normalize_text,
-    release_self_join_caches,
-    simhash,
-    simhash_near_dup_pairs,
-    pair_features,
-    remove_duplicate_spans,
-    simhash_near_dup_pairs_cross,
-    two_stage_dedup,
-    word_shingle_posts,
-)
-from chapterhousedb_spark.operators.classifier import (
-    QUALITY_FEATURES,
-    logreg_score,
-    logreg_train,
-    train_quality_classifier,
-)
-from chapterhousedb_spark.operators.cluster import (
-    components_update,
-    connected_components,
-    connected_components_star,
-    dedup_survivors,
-)
-from chapterhousedb_spark.operators.dsir import (
-    dsir_gram_posts,
-    dsir_quality_gate,
-    dsir_score,
-    dsir_topk,
-    dsir_train,
-)
-from chapterhousedb_spark.operators.ingest import (
-    admit_batch,
-    fineweb_quality_gate,
-    fingerprint_kit,
-    ingest_stream,
-    init_ingest,
-    read_fingerprints,
-    vacuum_fingerprints,
-)
-from chapterhousedb_spark.operators.merge import (
-    merge_apply_partitioned,
-    merge_stats,
-    merge_upsert,
-    merge_upsert_small_updates,
-)
-from chapterhousedb_spark.operators.similarity import (
-    cosine_topk,
-    embedding_dedup_survivors,
-    embedding_near_dup_pairs,
-    embedding_near_dup_pairs_cross,
-    ivf_ann_topk,
-    ivf_assign,
-    ivf_fit,
-    ivf_probe_cells,
-    ivf_append,
-    ivf_probe_topk,
-    mrl_append,
-    mrl_coarse_scores,
-    mrl_probe_topk,
-    mrl_topk,
-    mrl_write_index,
-    pq_append,
-    pq_probe_topk,
-    pq_write_index,
-    semdedup_survivors,
-    sq8_append,
-    sq8_probe_topk,
-    sq8_write_index,
-    ivf_read_index,
-    ivf_write_index,
-    srp_append,
-    srp_probe_topk,
-    srp_read_index,
-    srp_write_index,
-    srp_signature,
-    srp_ann_topk,
-)
-from chapterhousedb_spark.operators.multimodal import (
-    audio_features,
-    extract_features,
-    gif_frames,
-    resize_media,
-)
-from chapterhousedb_spark.operators.profile import (
-    key_skew,
-    source_overlap,
-)
-from chapterhousedb_spark.operators.sampling import (
-    token_budget_mix,
-)
-from chapterhousedb_spark.operators.classifier import (
-    lang_ngram_score,
-    lang_ngram_train,
-)
-from chapterhousedb_spark.operators.urls import (
-    canonicalize_url,
-    url_dedup,
-    url_host,
-    url_registered_domain,
-)
-from chapterhousedb_spark.operators.text import (
-    bpe_segment,
-    chunk_text,
-    kneser_ney_bigram,
-    bpe_train,
-    bpe_train_from_words,
-    lang_id,
-    bigram_lm_stats,
-    rarity_stats,
-    redact_pii,
-    pack_best_fit,
-    pack_sequences,
-    text_fingerprint,
-    gopher_quality_stats,
-    strip_markup,
-    text_stats,
-    token_count,
-    unigram_segment,
-    unigram_train,
-    unigram_train_from_words,
-)
-
-__all__ = [
-    "admit_batch",
-    "fineweb_quality_gate",
-    "fingerprint_kit",
-    "bpe_segment",
-    "chunk_text",
-    "bpe_train",
-    "bpe_train_from_words",
-    "kneser_ney_bigram",
-    "unigram_segment",
-    "unigram_train",
-    "unigram_train_from_words",
-    "asof_join",
-    "components_update",
-    "connected_components",
-    "connected_components_star",
-    "dedup_survivors",
-    "dsir_gram_posts",
-    "dsir_quality_gate",
-    "dsir_score",
-    "dsir_topk",
-    "dsir_train",
-    "ingest_stream",
-    "init_ingest",
-    "read_fingerprints",
-    "vacuum_fingerprints",
-    "ivf_append",
-    "mrl_append",
-    "mrl_coarse_scores",
-    "mrl_probe_topk",
-    "mrl_topk",
-    "mrl_write_index",
-    "pq_append",
-    "pq_probe_topk",
-    "pq_write_index",
-    "semdedup_survivors",
-    "sq8_append",
-    "sq8_probe_topk",
-    "sq8_write_index",
-    "bigram_lm_stats",
-    "embedding_dedup_survivors",
-    "rarity_stats",
-    "token_budget_mix",
-    "key_skew",
-    "source_overlap",
-    "canonicalize_url",
-    "url_dedup",
-    "url_host",
-    "url_registered_domain",
-    "char_shingle_posts",
-    "contamination_pairs",
-    "contamination_short_probes",
-    "duplicate_spans",
-    "cosine_topk",
-    "embedding_near_dup_pairs",
-    "embedding_near_dup_pairs_cross",
-    "exact_dedup",
-    "line_dedup",
-    "lsh_tune",
-    "ivf_ann_topk",
-    "ivf_assign",
-    "ivf_fit",
-    "ivf_probe_cells",
-    "ivf_probe_topk",
-    "ivf_read_index",
-    "ivf_write_index",
-    "srp_append",
-    "srp_probe_topk",
-    "srp_read_index",
-    "srp_write_index",
-    "lang_id",
-    "merge_apply_partitioned",
-    "merge_stats",
-    "merge_upsert",
-    "merge_upsert_small_updates",
-    "minhash_near_dup_pairs",
-    "minhash_near_dup_pairs_cross",
-    "minhash_near_dup_pairs_cross_sigs",
-    "minhash_signature",
-    "ngram_jaccard_pairs",
-    "normalize_text",
-    "pack_best_fit",
-    "pack_sequences",
-    "redact_pii",
-    "release_self_join_caches",
-    "simhash",
-    "simhash_near_dup_pairs",
-    "simhash_near_dup_pairs_cross",
-    "srp_ann_topk",
-    "srp_signature",
-    "text_fingerprint",
-    "gopher_quality_stats",
-    "strip_markup",
-    "text_stats",
-    "token_count",
-    "audio_features",
-    "extract_features",
-    "gif_frames",
-    "resize_media",
-    "lang_ngram_score",
-    "lang_ngram_train",
-    "logreg_score",
-    "logreg_train",
-    "pair_features",
-    "remove_duplicate_spans",
-    "train_quality_classifier",
-    "two_stage_dedup",
-    "word_shingle_posts",
-]

@@ -115,8 +115,9 @@ def srp_ann_topk(
     per table is found with probability 1 - (1-p)^T after T tables, so
     recall compounds where deeper multiprobe flattens (VERDICT r14 #5:
     multiprobe alone plateaued well under 0.8 on the probe corpus;
-    4 tables at planes=12/multiprobe=2 cleared it — see
-    scripts/scale_probe.py srp_recall_curve and SCALE.md). Scan cost:
+    4 tables at planes=12/multiprobe=2 cleared it — see the
+    srp_recall_curve keys of scripts/scale_probe_r15.json and SCALE.md
+    "ANN recall program"). Scan cost:
     still ONE pass over the corpus (the per-table bucket filters OR
     together), candidate volume ~T x single-table; on a persisted
     layout each table is its own bucket-partitioned index
@@ -1353,7 +1354,8 @@ def pq_topk(
     production shape (VERDICT r14 #5): raw ADC at the default bit
     budget recalls ~0.5@10 on the probe corpus, a k-scale exact rerank
     (refine = 10k) lifts it past 0.9 at O(refine) extra row reads —
-    see scripts/scale_probe.py pq_refine_curve. normalize=False skips
+    see the pq_refine_curve keys of scripts/scale_probe_r15.json and
+    SCALE.md "ANN recall program". normalize=False skips
     the unit projection in encode AND scoring (raw-space codebooks —
     the pinned-codebook oracle twins' shape)."""
     if codebooks is None:
@@ -1536,7 +1538,7 @@ def ivf_pq_topk(
         # share ONE materialization instead of re-running the corpus
         # scan ~3x. The result is returned lazily, so the cache is
         # registered with the self-join cache registry (released by
-        # operators.release_self_join_caches(), exactly like the
+        # operators.dedup.release_self_join_caches(), exactly like the
         # near-dup pair caches — bench.py already releases per query).
         from chapterhousedb_spark.operators.dedup import (
             _persist_for_self_join,
@@ -2383,7 +2385,7 @@ def knn_join(
     near-dup gate's economics, and the exact-cosine verify cost is
     paid once per UNDIRECTED pair before the direction union. Like
     the near-dup gate, the candidate stage persists intermediates —
-    call operators.release_self_join_caches() after materializing."""
+    call operators.dedup.release_self_join_caches() after materializing."""
     from pyspark.sql.window import Window
 
     pairs = embedding_near_dup_pairs(

@@ -16,19 +16,24 @@ planned by Catalyst.
 """
 
 from chapterhousedb_spark.sqlfront.splitter import split_statements
-from chapterhousedb_spark.sqlfront.table_funcs import (
-    TableFuncCall,
-    TableFuncSyntaxError,
-    TableFunction,
-    TableFunctionRegistry,
-    default_table_function_registry,
-)
 
-__all__ = [
+# The table-function names resolve on first touch (PEP 562), because
+# table_funcs imports pyspark and the splitter must not: the CLI's
+# --connect client lexes its input on a machine without Spark.
+_TABLE_FUNC_EXPORTS = {
     "TableFuncCall",
     "TableFuncSyntaxError",
     "TableFunction",
     "TableFunctionRegistry",
     "default_table_function_registry",
-    "split_statements",
-]
+}
+
+__all__ = sorted(_TABLE_FUNC_EXPORTS) + ["split_statements"]
+
+
+def __getattr__(name: str):
+    if name in _TABLE_FUNC_EXPORTS:
+        from chapterhousedb_spark.sqlfront import table_funcs
+
+        return getattr(table_funcs, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

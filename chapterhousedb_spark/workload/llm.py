@@ -874,7 +874,8 @@ def srp_multitable_ann_q(spark, sf_dir):
     multiprobe-1 bucket sets, candidates unioned across tables in ONE
     corpus pass, then one exact rerank. Recall compounds as
     1 - (1-p)^T across tables where deeper multiprobe flattens — the
-    measured curve lives in scripts/scale_probe.py srp_recall_curve.
+    measured curve is the srp_recall_curve keys of
+    scripts/scale_probe_r15.json (SCALE.md "ANN recall program").
     The oracle replays BOTH pinned sign matrices, both probe sets, the
     OR-union and the rerank hash-exactly, so the gate pins the
     multi-table candidate semantics, not just row counts. At scale
@@ -1379,7 +1380,8 @@ def pq_refine_fixed_q(spark, sf_dir):
     STRICTLY SUBSUMES pq_fixed_codebook's ADC arithmetic (identical
     codebook, identical LUT fold) and additionally pins the refine
     composition that lifts PQ recall past 0.9@10 on the probe corpus
-    (scripts/scale_probe.py pq_refine_curve); only `refine` rows ever
+    (the pq_refine_curve keys of scripts/scale_probe_r15.json, SCALE.md
+    "ANN recall program"); only `refine` rows ever
     load their full vectors, so the rerank is O(refine) row reads at
     any corpus size."""
     from chapterhousedb_spark.operators.similarity import pq_topk

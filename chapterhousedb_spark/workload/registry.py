@@ -128,11 +128,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     raw microsecond value and hash-matches DuckDB, which reads the
     same file as a naive TIMESTAMP.
     """
-    with _LOAD_MEMO_LOCK:
-        memo = _LOAD_MEMO.setdefault(spark, {})
-        cached = memo.get((sf_dir, table))
-    if cached is not None:
-        return cached
     if table == "events":
         # Defensive: the correctness harness builds its own plain
         # SparkSession where build_session()'s conf is absent; without
@@ -142,7 +137,14 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # every downstream unix_timestamp/date_trunc interpret wall
         # clocks in the SESSION zone; DuckDB reads the file naive. Only
         # UTC makes them agree, so don't inherit the harness JVM's zone.
+        # Both pins run before the memo lookup: queries built on a
+        # memoized frame read the session zone when they run.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with _LOAD_MEMO_LOCK:
+        memo = _LOAD_MEMO.setdefault(spark, {})
+        cached = memo.get((sf_dir, table))
+    if cached is not None:
+        return cached
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
         from pyspark.sql import functions as F

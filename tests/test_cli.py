@@ -254,10 +254,11 @@ def test_repl_bidirectional_paging_and_exit(tmp_path):
 
 
 def test_repl_multiline_errors_explain_and_page_guard(tmp_path):
-    """Statements buffer until ';' across lines; a failing statement
-    reports and the loop continues (rc=1 like batch mode); \\explain
-    prints a plan without executing; paging before any result is a
-    friendly note, as is paging past the end."""
+    """Statements buffer until a code ';' across lines (not a ';' inside
+    a multi-line string); a failing statement reports and the loop
+    continues (rc=1 like batch mode); \\explain prints a plan without
+    executing; paging before any result is a friendly note, as is
+    paging past the end."""
     proc = _run_repl(
         "p\n"                                      # nothing to page yet
         "select count(*) as n\n"
@@ -266,6 +267,8 @@ def test_repl_multiline_errors_explain_and_page_guard(tmp_path):
         "select broken from nowhere;\n"
         "\\explain select 1 as one;\n"
         "select 2 as two;\n"
+        "select 'a;\n"                             # ';' inside a string
+        "b' as s;\n"
         "quit\n"
     )
     assert proc.returncode == 1, proc.stderr[-2000:]
@@ -276,6 +279,8 @@ def test_repl_multiline_errors_explain_and_page_guard(tmp_path):
     assert "-- error: select broken from nowhere" in out
     assert "== Optimized Logical Plan ==" in out or "Project" in out
     assert "two\n---\n2" in out
+    assert "-- complete: select 'a;\nb' as s" in out
+    assert "-- error: select 'a;" not in out
     assert "-- error:" in proc.stderr
 
 

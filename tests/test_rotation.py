@@ -171,7 +171,14 @@ def test_load_memo_reuses_relation_per_session(spark):
     c = load(spark, sf, "region")
     assert c is not a
     e1 = load(spark, sf, "events")
-    e2 = load(spark, sf, "events")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        # a memo hit must still pin the zone the ts normalization needs
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        e2 = load(spark, sf, "events")
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
     assert e1 is e2
     assert dict(e1.dtypes)["ts"] == "timestamp"
     # a different dir is a different key (tests point load at tmp dirs)

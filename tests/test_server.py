@@ -377,6 +377,26 @@ def test_second_process_full_lifecycle(tmp_path):
             server.kill()
 
 
+def test_leaf_imports_load_only_their_own_modules():
+    """Importing one module loads what it uses, not its siblings: the
+    SQL lexer the thin client's REPL ends statements with imports no
+    pyspark, and a Python worker unpickling a text UDF loads neither the
+    multimodal nor the similarity operators."""
+    probe = (
+        "import sys\n"
+        "import chapterhousedb_spark.sqlfront.splitter\n"
+        "assert 'pyspark' not in sys.modules\n"
+        "import chapterhousedb_spark.operators.text\n"
+        "loaded = [m for m in ('multimodal', 'similarity')\n"
+        "          if 'chapterhousedb_spark.operators.' + m in sys.modules]\n"
+        "assert not loaded, loaded\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
 def test_serve_connect_flag_validation():
     """--serve/--connect argument contract: mutually exclusive;
     --serve takes no statements; --connect rejects server-side
