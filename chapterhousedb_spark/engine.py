@@ -33,7 +33,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from chapterhousedb_spark.config import ConnectionRegistry
-from chapterhousedb_spark.results import QueryDataIterator, ResultCursor, ResultManifest
+from chapterhousedb_spark.results import (
+    QueryDataIterator,
+    ResultCursor,
+    ResultManifest,
+    RowGroupCache,
+)
 from chapterhousedb_spark.session import build_session
 from chapterhousedb_spark.sqlfront import split_statements
 from chapterhousedb_spark.sqlfront.table_funcs import (
@@ -50,9 +55,12 @@ from chapterhousedb_spark.status import QueryStatus  # noqa: E402
 
 # Row-group cap for materialized results: the reference's
 # max_rows_per_batch (physical_planner.rs:580). ResultCursor decodes
-# every row group a page overlaps, so this bounds the rows a page fetch
-# decodes per file it touches.
+# whole row groups, so this bounds the rows one cache miss decodes.
 RESULT_ROW_GROUP_ROWS = 10_000
+# Bound on the bytes (pa.Table.nbytes) of decoded row groups one engine
+# keeps for paging, over all its results: a 10,000-row group of a few
+# columns decodes to well under 1 MiB, so about a hundred groups fit.
+RESULT_CACHE_BYTES = 64 * 1024 * 1024
 
 
 @dataclass
@@ -68,6 +76,8 @@ class QueryHandle:
     pool_applied: str | None = None
     finished_at: float | None = None  # time.time() at COMPLETE/ERROR
     _done: threading.Event = field(default_factory=threading.Event, repr=False)
+    # set before COMPLETE, cleared by Engine.drop_results
+    _cursor: ResultCursor | None = field(default=None, repr=False)
 
     def wait(self, timeout: float | None = None) -> "QueryHandle":
         self._done.wait(timeout)
@@ -108,6 +118,7 @@ class Engine:
         self._stream_stopped: dict[str, float] = {}
         self._pool = ThreadPoolExecutor(max_workers=max_concurrent_queries)
         self._lock = threading.Lock()
+        self._row_groups = RowGroupCache(RESULT_CACHE_BYTES)
 
     # ---------------------------------------------------------------- registry
 
@@ -319,6 +330,7 @@ class Engine:
             manifest.save(out_dir)
             handle.result_dir = out_dir
             handle.num_rows = manifest.total_rows
+            handle._cursor = ResultCursor(out_dir, manifest, self._row_groups)
             handle.status = QueryStatus.COMPLETE
         except Exception as exc:  # surfaced via status/error like the reference
             handle.status = QueryStatus.ERROR
@@ -523,24 +535,30 @@ class Engine:
         return self._queries[query_id]
 
     def fetch(self, query_id: str, offset: int = 0, limit: int = 50) -> pa.Table:
-        h = self._queries[query_id]
-        if h.status is not QueryStatus.COMPLETE:
-            raise RuntimeError(f"query {query_id} not complete (status={h.status})")
-        assert h.result_dir is not None
-        return ResultCursor(h.result_dir).fetch(offset, limit)
+        return self._cursor(query_id).fetch(offset, limit)
 
     def iterator(self, query_id: str, page_size: int = 50) -> QueryDataIterator:
+        return QueryDataIterator(self._cursor(query_id), page_size)
+
+    def _cursor(self, query_id: str) -> ResultCursor:
         h = self._queries[query_id]
         if h.status is not QueryStatus.COMPLETE:
             raise RuntimeError(f"query {query_id} not complete (status={h.status})")
-        assert h.result_dir is not None
-        return QueryDataIterator(ResultCursor(h.result_dir), page_size)
+        cursor = h._cursor
+        if cursor is None:  # dropped since the lookup above
+            raise KeyError(query_id)
+        return cursor
 
     # ----------------------------------------------------------------- cleanup
 
     def drop_results(self, query_id: str) -> None:
         h = self._queries.pop(query_id, None)
-        if h and h.result_dir and os.path.isdir(h.result_dir):
+        if h is None:
+            return
+        if h._cursor is not None:
+            h._cursor.close()
+            h._cursor = None
+        if h.result_dir and os.path.isdir(h.result_dir):
             shutil.rmtree(h.result_dir, ignore_errors=True)
 
     def vacuum(self, older_than_seconds: float = 0.0) -> list[str]:
@@ -616,8 +634,15 @@ class Engine:
         caches only when this engine OWNS the session (it built it) or
         the caller passes release_caches=True — an engine constructed
         on a shared session must not unpersist intermediates that other
-        components on that session may still be consuming."""
+        components on that session may still be consuming. Every
+        result's decoded row groups are dropped; its files stay, and a
+        fetch after close decodes them again."""
         self._pool.shutdown(wait=True)
+        with self._lock:
+            handles = list(self._queries.values())
+        for h in handles:
+            if h._cursor is not None:
+                h._cursor.close()
         if release_caches is None:
             release_caches = self._owns_session
         if release_caches:

@@ -42,6 +42,17 @@ def test_smoke_scan_filter_project(engine, sf_dir):
     page = engine.fetch(h.query_id, 0, 10)
     assert page.num_rows == 10
     assert page.column_names == ["l_orderkey", "q_plus_10", "price_scaled"]
+    # the manifest's schema text, taken from the footer's metadata, is
+    # the text a separate schema read of the first file gives
+    import os
+
+    import pyarrow.parquet as pq
+
+    from chapterhousedb_spark.results import ResultManifest
+
+    manifest = ResultManifest.load(h.result_dir)
+    first = os.path.join(h.result_dir, manifest.files[0])
+    assert manifest.schema_json == str(pq.read_schema(first))
 
 
 def test_connection_named_arg(engine):
@@ -94,13 +105,13 @@ def test_order_by_and_pagination(engine, sf_dir):
     assert engine.fetch(h.query_id, 50, 50).column("o_orderkey").to_pylist() == keys2
 
 
-def test_result_row_groups_capped_and_paging_across_boundaries(engine):
+def test_result_row_groups_capped_and_paging_across_boundaries(engine, monkeypatch):
     """Results are written in row groups of at most 10,000 rows (the
-    reference's max_rows_per_batch), and pages that straddle a row-group
-    or file boundary, forward or backward, equal their slice of the
-    result. Two range partitions give two 12,500-row files in id order:
-    row-group boundaries at 10,000 and 22,500, a file boundary at
-    12,500."""
+    reference's max_rows_per_batch), a walk of consecutive pages decodes
+    each group once, and pages that straddle a row-group or file
+    boundary, forward or backward, equal their slice of the result. Two
+    range partitions give two 12,500-row files in id order: row-group
+    boundaries at 10,000 and 22,500, a file boundary at 12,500."""
     import os
 
     import pyarrow.parquet as pq
@@ -123,6 +134,20 @@ def test_result_row_groups_capped_and_paging_across_boundaries(engine):
     def ids(t):
         return t.column("id").to_pylist()
 
+    decoded = []
+    read_row_groups = pq.ParquetFile.read_row_groups
+
+    def counted(pf, row_groups, *args, **kwargs):
+        decoded.append(list(row_groups))
+        return read_row_groups(pf, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counted)
+    it = engine.iterator(h.query_id, page_size=50)
+    walk = [ids(it.next_page()) for _ in range(200)]
+    assert walk == [rows[k * 50 : (k + 1) * 50] for k in range(200)]
+    assert decoded == [[0]]  # the first group, once for 200 pages
+    monkeypatch.undo()
+
     for offset in (9_975, 12_475, 22_475):
         assert ids(engine.fetch(h.query_id, offset, 50)) == rows[
             offset : offset + 50
@@ -141,6 +166,94 @@ def test_fetch_past_end(engine, sf_dir):
     )
     t = engine.fetch(h.query_id, 10_000, 50)
     assert t.num_rows == 0
+    assert t.schema == engine.fetch(h.query_id, 0, 50).schema
+
+
+def _cached_results(eng) -> set[str]:
+    return {key[0] for key in eng._row_groups._groups}
+
+
+def test_paged_results_release_on_drop_and_vacuum(spark, tmp_path):
+    """drop_results and vacuum take a result's cursor and its decoded
+    row groups with it; a fetch on the dropped query raises."""
+    eng = Engine(spark=spark, results_dir=str(tmp_path / "res"))
+    try:
+        h1, h2 = eng.sql_wait("select id from range(100); select id from range(200)")
+        for h in (h1, h2):
+            assert eng.fetch(h.query_id, 0, 10).num_rows == 10
+        assert _cached_results(eng) == {h1.result_dir, h2.result_dir}
+        eng.drop_results(h1.query_id)
+        assert h1._cursor is None and h1.query_id not in eng._queries
+        assert _cached_results(eng) == {h2.result_dir}
+        with pytest.raises(KeyError):
+            eng.fetch(h1.query_id, 0, 10)
+        assert eng.vacuum() == [h2.query_id]
+        assert h2._cursor is None and not eng._queries
+        assert _cached_results(eng) == set() and eng._row_groups.nbytes == 0
+    finally:
+        eng.close()
+
+
+def test_paged_row_group_bytes_stay_under_the_bound(spark, tmp_path, monkeypatch):
+    """Paging more results than the cache holds evicts the least
+    recently used groups: the decoded bytes never exceed the engine's
+    RESULT_CACHE_BYTES (lowered here so three small results overflow
+    it), and evicted groups decode again on demand."""
+    import chapterhousedb_spark.engine as engine_mod
+
+    bound = 200_000  # two of the 10,000-row bigint groups (80 kB each)
+    monkeypatch.setattr(engine_mod, "RESULT_CACHE_BYTES", bound)
+    eng = Engine(spark=spark, results_dir=str(tmp_path / "res"))
+    try:
+        handles = eng.sql_wait(
+            ";".join(f"select id + {k} as v from range(0, 25000, 1, 2)" for k in range(3))
+        )
+        for _ in range(2):
+            for k, h in enumerate(handles):
+                for offset in range(0, 25_000, 2_500):
+                    page = eng.fetch(h.query_id, offset, 50)
+                    assert page.column("v").to_pylist() == list(
+                        range(offset + k, offset + k + 50)
+                    )
+                    assert 0 < eng._row_groups.nbytes <= bound
+        assert len(_cached_results(eng)) == 1
+    finally:
+        eng.close()
+    assert eng._row_groups.nbytes == 0
+
+
+def test_concurrent_pagers_get_exact_slices(engine):
+    """Four threads paging one result at once, each starting in a
+    different row group and wrapping around, all get their exact
+    slices while the groups they share decode and cache under them."""
+    import sys
+    import threading
+
+    [h] = engine.sql_wait("select id from range(0, 25000, 1, 2)")
+    assert h.status is QueryStatus.COMPLETE, h.error
+    errors: list[str] = []
+
+    def walk(start: int) -> None:
+        for k in range(500):
+            offset = (start + 50 * k) % 25_000
+            got = engine.fetch(h.query_id, offset, 50).column("id").to_pylist()
+            if got != list(range(offset, offset + 50)):
+                errors.append(f"offset {offset}: {got[:3]}...")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=walk, args=(s,)) for s in (0, 9_950, 12_450, 22_450)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
 
 
 def test_concurrent_submissions(engine, sf_dir):
